@@ -38,11 +38,13 @@ entry-smoke:
 pkg-smoke:
 	$(PYTHON) tools/pkg_smoke.py
 
-## test-smoke: fast non-Spark-heavy suite slice (~1-2 min)
+## test-smoke: fast non-Spark-heavy suite slice (~1-2 min), plus the bench
+## envelope-gate replay over the committed BENCH_r*.json artifacts
 test-smoke:
 	$(PYTHON) -m pytest -q tests/test_rotation.py tests/test_health.py \
 	  tests/test_dashboard.py tests/test_metrics.py tests/test_config.py \
 	  tests/test_logging_setup.py tests/test_plans.py
+	$(PYTHON) -m pytest -q tests/test_bench_probes.py -k "gate or compact_line"
 
 ## test: the DEFAULT (driver-verify) tier — correctness-critical pins
 ## (<10 min solo; pyproject addopts deselect `slow`)

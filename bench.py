@@ -3,11 +3,16 @@
 The FINAL stdout line is ONE compact JSON object {"metric": ..., "value":
 total_sec, "unit": "sec", "queries": {name: sec}, "sf": sf, ...} sized to
 fit the driver's 2000-byte tail-capture window. The full diagnostics
-(per-query baseline ratios, CDC/streaming/replay rigs) are printed on an
+(per-query reference ratios, CDC/streaming/replay rigs) are printed on an
 earlier line AND written to bench_full_latest.json.
 
 Each timed run executes the full plan and consumes results via count()
 (no driver-side materialization of wide rows).
+
+The one gate: envelope_ok is true when every headline query with a
+REFERENCE row runs within ENVELOPE (2x) of that first-appearance wall,
+raw — no drift normalization. The pinned probe pair (probe_shift) reports
+host drift next to the verdict and never changes it.
 """
 
 from __future__ import annotations
@@ -15,7 +20,6 @@ from __future__ import annotations
 import json
 import os
 import sys
-import statistics
 import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
@@ -58,10 +62,21 @@ HEADLINE = [
     "q98q_zipf_vocab",           # token explode + topk window + integer fit
 ]
 
-# r1 per-query baseline (BENCH_r01.json, sf0.1) — the reference point for
-# the 2x regression envelope. Queries added after r1 have no baseline row;
-# their first bench appearance becomes the cross-round reference instead.
-R1_BASELINE = {
+# First-appearance reference walls (sf0.1): the denominator of the 2x
+# regression envelope. The r1 rows come from BENCH_r01.json; queries added
+# after r1 track against their first bench appearance (BENCH_r04.json).
+# Later headline additions (round 7 on) carry no reference row.
+#
+# q96e is rebased to its r8 solo measurement: the r4 anchor (4.079 s) was
+# measured in an environment this VM class no longer reproduces for the
+# CPU-bound similarity joins specifically — the decisive head-to-head (r8,
+# same session, same VM): the VERBATIM r4-era q96e code runs 16.2 s today
+# while the current sparse+dense-verify plan runs 8.4 s, i.e. the current
+# code is 2x FASTER than the r4 code head-to-head and the cross-round raw
+# ratio (8.4/4.079 = 2.1) is pure environment drift. PLANS.md 'q96e
+# rebaseline' has the full experiment.
+REFERENCE = {
+    # r1
     "q30_grouped_agg_tpch_q1": 0.835,
     "q20_inner_join": 0.699,
     "q25_broadcast_join": 0.72,
@@ -76,20 +91,7 @@ R1_BASELINE = {
     "q97_cosine_topk": 0.863,
     "q98_text_stats": 0.235,
     "q94_curation_pipeline": 2.862,
-}
-
-# first-appearance reference for post-r1 headline queries (BENCH_r04.json,
-# sf0.1).
-#
-# q96e is rebased to its r8 solo measurement: the r4 anchor (4.079 s) was
-# measured in an environment this VM class no longer reproduces for the
-# CPU-bound similarity joins specifically — the decisive head-to-head (r8,
-# same session, same VM): the VERBATIM r4-era q96e code runs 16.2 s today
-# while the current sparse+dense-verify plan runs 8.4 s, i.e. the current
-# code is 2x FASTER than the r4 code head-to-head and the cross-round raw
-# ratio (8.4/4.079 = 2.1) is pure environment drift. PLANS.md 'q96e
-# rebaseline' has the full experiment.
-R4_REFERENCE = {
+    # r4
     "qh05_local_supplier_volume": 0.945,
     "qh08_market_share": 1.168,
     "qh21_waiting_supplier": 1.655,
@@ -100,85 +102,42 @@ R4_REFERENCE = {
     "q95p_dup_span_extract": 1.839,
 }
 
-# Drift CLASS of each reference-carrying headline query. Host drift is not
-# uniform across workload shapes (r8 and r11 both show the shuffle-bound
-# median moving one way while many-stage CPU-bound similarity jobs move
-# the other), so a single global median mis-normalizes whichever class it
-# wasn't computed from. Queries whose wall is dominated by exchanges /
-# sort-merge machinery are "shuffle"; queries dominated by per-row JVM or
-# Arrow compute across many narrow stages (hashing, regex, vector math,
-# candidate verification) are "cpu". Each query's envelope ratio is judged
-# against its OWN class median (plus the raw and global-median readings —
-# min() of all three, so the gate still never fakes a regression).
-DRIFT_CLASS = {
-    # shuffle-bound
-    "q30_grouped_agg_tpch_q1": "shuffle",
-    "q20_inner_join": "shuffle",
-    "q25_broadcast_join": "shuffle",
-    "q27_asof_join": "shuffle",
-    "qh05_local_supplier_volume": "shuffle",
-    "qh08_market_share": "shuffle",
-    "qh21_waiting_supplier": "shuffle",
-    "q40_ranking_windows": "shuffle",
-    "q52_topk_per_group": "shuffle",
-    "q34_having": "shuffle",
-    "q36_stat_aggs": "shuffle",
-    "qc01_cdc_normalize": "shuffle",
-    "q95_exact_dedup": "shuffle",
-    "q96_minhash_lsh": "shuffle",
-    # many-stage CPU-bound
-    "q97_cosine_topk": "cpu",
-    "q98_text_stats": "cpu",
-    "q94_curation_pipeline": "cpu",
-    "q94d_curation_pipeline_lsh": "cpu",
-    "q96d_semdedup": "cpu",
-    "q96e_tfidf_cosine": "cpu",
-    "q97h_bm25_topk": "cpu",
-    "q95p_dup_span_extract": "cpu",
-}
+# BASELINE.md: every headline query stays within 2x of its reference.
+ENVELOPE = 2.0
 
-# Fresh anchors measured on the ROUND-14 host profile (r13 verdict item 1:
-# the r1/r4 anchors are nine rounds and several VM-profile shifts old —
-# q97h_bm25_topk's normalized ratio crept 2.03 -> 2.23 across three rounds
-# of byte-identical code while its absolute wall stayed flat, which is
-# anchor rot, not regression). Method (tools/reanchor.py, provenance in
-# ANCHORS_R14.json, committed): SOLO sf0.1 local[32]; per query min of 3
-# warm runs; repeated in 3 INDEPENDENT JVMs; anchor = median of the three
-# mins — q97h's three rep-mins landed within 1% of each other (1.226 /
-# 1.235 / 1.238). The r1/r4 series above KEEPS running in every artifact
-# for cross-round history; vs_anchor_* below is the honest current-profile
-# reading the envelope narrative should quote.
-R14_ANCHOR = {
-    "q30_grouped_agg_tpch_q1": 0.508,
-    "q20_inner_join": 0.38,
-    "q25_broadcast_join": 0.389,
-    "q27_asof_join": 0.785,
-    "q40_ranking_windows": 0.15,
-    "q52_topk_per_group": 0.551,
-    "q34_having": 0.573,
-    "q36_stat_aggs": 0.199,
-    "qc01_cdc_normalize": 0.62,
-    "q95_exact_dedup": 0.246,
-    "q96_minhash_lsh": 1.623,
-    "q97_cosine_topk": 0.558,
-    "q98_text_stats": 0.143,
-    "q94_curation_pipeline": 1.884,
-    "qh05_local_supplier_volume": 0.705,
-    "qh08_market_share": 0.734,
-    "qh21_waiting_supplier": 1.038,
-    "q94d_curation_pipeline_lsh": 2.215,
-    "q96d_semdedup": 2.338,
-    "q96e_tfidf_cosine": 4.83,
-    "q97h_bm25_topk": 1.235,
-    "q95p_dup_span_extract": 1.994,
-}
+
+def reference_ratios(times: dict[str, float]) -> dict[str, float]:
+    """Raw wall / reference for every referenced query in ``times``."""
+    return {n: t / REFERENCE[n] for n, t in times.items() if n in REFERENCE}
+
+
+def envelope_violators(times: dict[str, float]) -> list[str]:
+    """Referenced queries slower than ENVELOPE x their reference wall."""
+    return [n for n, r in reference_ratios(times).items() if r > ENVELOPE]
+
+
+def envelope_ok(times: dict[str, float]) -> bool:
+    return not envelope_violators(times)
+
+
+def timed_runs(thunk, reps: int) -> list[float]:
+    """Wall seconds of ``reps`` back-to-back calls of ``thunk``; the thunk
+    must consume its result (e.g. end in ``.count()``) so the work is done
+    inside the timed region."""
+    walls = []
+    for _ in range(reps):
+        t0 = time.perf_counter()
+        thunk()
+        walls.append(time.perf_counter() - t0)
+    return walls
+
 
 # Anchors for the fixed per-class drift probes below, measured on the
-# round-12 host (min-of-3, solo session, sf0.1). Future rounds divide the
-# probe's fresh wall by its anchor to get a QUERY-INDEPENDENT per-class
-# shift estimate alongside the query-derived medians. PINNED: neither the
-# probe code nor these numbers may change once recorded, or the cross-round
-# comparison is broken.
+# round-12 host (min-of-3, solo session, sf0.1). Dividing a probe's fresh
+# wall by its anchor gives a QUERY-INDEPENDENT per-class host-shift
+# estimate, reported next to the envelope (it never changes the verdict).
+# PINNED: neither the probe code nor these numbers may change once
+# recorded, or the cross-round comparison is broken.
 PROBE_ANCHOR = {"shuffle": 0.512, "cpu": 0.691}
 
 
@@ -245,15 +204,10 @@ def run_class_probes(spark, sf_dir: str) -> dict:
         shared = grams.join(hot, "g", "left_semi").groupBy("doc_id").count()
         return sigs.join(shared, "doc_id", "left")
 
-    out = {}
-    for cls, fn in (("shuffle", probe_shuffle), ("cpu", probe_cpu)):
-        best = float("inf")
-        for _ in range(3):
-            t0 = time.perf_counter()
-            fn().count()
-            best = min(best, time.perf_counter() - t0)
-        out[cls] = round(best, 3)
-    return out
+    return {
+        cls: round(min(timed_runs(lambda: fn().count(), 3)), 3)
+        for cls, fn in (("shuffle", probe_shuffle), ("cpu", probe_cpu))
+    }
 
 
 def run_replay_sink_bench(
@@ -380,13 +334,8 @@ def run_blocked_window_bench(spark, sf_dir: str) -> dict:
     classic = pv.withColumn("below", F.coalesce(F.sum("c").over(wcl), F.lit(0)))
     blocked = blocked_cumsum(pv, "v", "c", "below")
 
-    def best_of(df, reps: int = 3) -> float:
-        best = float("inf")
-        for _ in range(reps):
-            t0 = time.perf_counter()
-            df.filter(F.col("below") >= 0).count()
-            best = min(best, time.perf_counter() - t0)
-        return best
+    def best_of(df) -> float:
+        return min(timed_runs(lambda: df.filter(F.col("below") >= 0).count(), 3))
 
     t_classic = best_of(classic)
     t_blocked = best_of(blocked)
@@ -531,9 +480,9 @@ def run_sf1_scaling(spark, sf_dir: str, base_times: dict[str, float]) -> dict:
     The 100 TB claims (banded LSH, prefix filtering, banded hamming,
     gram-keyed span dedup) are plan-pinned but were only ever TIMED at
     sf0.1. This fabricates the sf1.0-equivalent corpus — 10x mutated
-    replicas of the sf0.1 documents table (50k docs; same near-dup
-    structure the generator uses: ~10% exact dupes, the rest per-copy
-    prefixed variants) — in /tmp, runs each query once against it, and
+    replicas of the sf0.1 documents table (50k docs; write_amplified_corpus:
+    ~10% exact dupes, the rest copies with every 3rd token mutated) — in
+    /tmp, runs each query once against it, and
     reports exponent = log10(wall_sf1 / wall_sf0.1): 1.0 is linear,
     O(n log n) lands ~1.05-1.15, anything ≥ 1.4 means a candidate set is
     growing superlinearly. Single timed run per query (the session is
@@ -552,32 +501,28 @@ def run_sf1_scaling(spark, sf_dir: str, base_times: dict[str, float]) -> dict:
         shutil.rmtree(sf1_dir, ignore_errors=True)
 
 
-def _run_sf1_scaling_at(spark, sf_dir: str, base_times: dict[str, float],
-                        sf1_dir: str) -> dict:
-    import gc
-    import math
+SF1_COPIES = 10
 
+
+def write_amplified_corpus(spark, sf_dir: str, out_dir: str) -> None:
+    """Write the sf1.0-equivalent documents.parquet + embeddings.parquet
+    into ``out_dir``: SF1_COPIES copies of the sf_dir tables, ids offset by
+    copy * 1_000_000.
+
+    Constant dup DENSITY, like a real bigger corpus: copy 0 is the
+    original, copy 1 an exact dup (10% exact-dup rate), copies 2-9 mutate
+    every 3rd token with a copy-specific suffix — cross-copy cosine/Jaccard
+    drops below near-dup thresholds, so the true near-dup pair count grows
+    LINEARLY with the corpus. (Naive prefix-only mutation gives every doc 9
+    genuine near-twins; the output itself is then quadratic and the probe
+    can't distinguish algorithmic blowup from output growth.)
+    """
     from pyspark.sql import functions as F
 
     from better_cdc_spark.io import load_table
 
-    # shed the session state earlier bench sections pinned (cached frames,
-    # localCheckpoint RDDs) — the scale_probe lesson: accumulated executor
-    # memory pressure inflates late heavy kernels' walls up to ~7x
-    gc.collect()
-    spark.catalog.clearCache()
-
-    registry = load_all()
+    copies = spark.range(SF1_COPIES).select(F.col("id").alias("copy"))
     docs = load_table(spark, sf_dir, "documents")
-    n_copies = 10
-    # Constant dup DENSITY, like a real bigger corpus: copy 0 is the
-    # original, copy 1 an exact dup (10% exact-dup rate), copies 2-9
-    # mutate every 3rd token with a copy-specific suffix — cross-copy
-    # cosine/Jaccard drops below near-dup thresholds, so the true
-    # near-dup pair count grows LINEARLY with the corpus. (Naive
-    # prefix-only mutation gives every doc 9 genuine near-twins; the
-    # output itself is then quadratic and the probe can't distinguish
-    # algorithmic blowup from output growth.)
     toks = F.split(F.col("text"), " ")
     mutated = F.array_join(
         F.zip_with(
@@ -591,7 +536,7 @@ def _run_sf1_scaling_at(spark, sf_dir: str, base_times: dict[str, float],
         " ",
     )
     amplified = (
-        docs.crossJoin(spark.range(n_copies).select(F.col("id").alias("copy")))
+        docs.crossJoin(copies)
         .select(
             (F.col("doc_id") + F.col("copy") * 1_000_000).alias("doc_id"),
             F.when(F.col("copy") <= 1, F.col("text"))
@@ -605,14 +550,14 @@ def _run_sf1_scaling_at(spark, sf_dir: str, base_times: dict[str, float],
         .drop("copy")
     )
     amplified.repartition(32).write.mode("overwrite").parquet(
-        f"{sf1_dir}/documents.parquet"
+        f"{out_dir}/documents.parquet"
     )
     # embeddings, same constant-density scheme (q96d/q94d read them):
     # copy 1 is an exact dup, copies 2-9 perturb one copy-dependent
     # dimension so cross-copy cosine leaves near-dup range
     emb = load_table(spark, sf_dir, "embeddings")
     emb_amp = (
-        emb.crossJoin(spark.range(n_copies).select(F.col("id").alias("copy")))
+        emb.crossJoin(copies)
         .select(
             (F.col("vec_id") + F.col("copy") * 1_000_000).alias("vec_id"),
             F.when(F.col("copy") <= 1, F.col("embedding"))
@@ -630,8 +575,23 @@ def _run_sf1_scaling_at(spark, sf_dir: str, base_times: dict[str, float],
         )
     )
     emb_amp.repartition(32).write.mode("overwrite").parquet(
-        f"{sf1_dir}/embeddings.parquet"
+        f"{out_dir}/embeddings.parquet"
     )
+
+
+def _run_sf1_scaling_at(spark, sf_dir: str, base_times: dict[str, float],
+                        sf1_dir: str) -> dict:
+    import gc
+    import math
+
+    # shed the session state earlier bench sections pinned (cached frames,
+    # localCheckpoint RDDs) — the scale_probe lesson: accumulated executor
+    # memory pressure inflates late heavy kernels' walls up to ~7x
+    gc.collect()
+    spark.catalog.clearCache()
+
+    registry = load_all()
+    write_amplified_corpus(spark, sf_dir, sf1_dir)
 
     probes = [
         (name, registry[name].fn, base_times[name])
@@ -649,12 +609,9 @@ def _run_sf1_scaling_at(spark, sf_dir: str, base_times: dict[str, float],
             # registry headline walls its ratio divides by — a cold base
             # would inflate base_t and deflate ratio/exponent in
             # sf1_exponent_max's favor.
-            walls = []
-            for _ in range(2):
-                t0 = time.perf_counter()
-                rows_base = fn(spark, sf_dir).count()
-                walls.append(time.perf_counter() - t0)
-            base_t = round(min(walls), 3)
+            base_t = round(
+                min(timed_runs(lambda: fn(spark, sf_dir).count(), 2)), 3
+            )
         t0 = time.perf_counter()
         rows_sf1 = fn(spark, sf1_dir).count()
         wall = time.perf_counter() - t0
@@ -676,7 +633,7 @@ def _run_sf1_scaling_at(spark, sf_dir: str, base_times: dict[str, float],
             "rows_sf1": rows_sf1,
             "rows_ratio": round(rows_sf1 / max(rows_base, 1), 2),
         }
-    return {"n_docs_sf1": 50000, "amplification": n_copies, "queries": out}
+    return {"n_docs_sf1": 50000, "amplification": SF1_COPIES, "queries": out}
 
 
 def build_compact_line(full: dict) -> str:
@@ -691,26 +648,8 @@ def build_compact_line(full: dict) -> str:
         "queries": full["queries"],
         "sf": full["sf"],
         "envelope_ok": full["envelope_ok"],
-        "vm_shift_median": full["vm_shift_median"],
-        "vm_shift_shuffle": full["vm_shift_class"].get("shuffle"),
-        "vm_shift_cpu": full["vm_shift_class"].get("cpu"),
         "probe_shift_shuffle": full["probe_shift"].get("shuffle"),
         "probe_shift_cpu": full["probe_shift"].get("cpu"),
-        "vs_class_norm_max": max(full["vs_class_norm"].values(), default=None),
-        # honest current-profile drift reading (R14_ANCHOR provenance);
-        # .get(): pre-r14 artifacts (the committed test fixture) lack it —
-        # and then anchor_round must be None too, not a claim that r14
-        # anchoring ran on a dict that carries no anchor readings
-        "anchor_round": 14 if full.get("vs_anchor_r14") else None,
-        "vs_anchor_max": max(
-            full.get("vs_anchor_r14", {}).values(), default=None
-        ),
-        "vs_anchor_class_norm_max": max(
-            full.get("vs_anchor_class_norm", {}).values(), default=None
-        ),
-        "q97h_anchor_class_norm": full.get("vs_anchor_class_norm", {}).get(
-            "q97h_bm25_topk"
-        ),
         "sf1_exponent_max": max(
             (q["exponent"]
              for q in full["sf1_scaling"].get("queries", {}).values()),
@@ -733,8 +672,11 @@ def build_compact_line(full: dict) -> str:
             "txlog_replay_ms_per_epoch"
         ),
         "blocked_vs_window_ratio": full["blocked_window"].get("ratio"),
-        "vs_baseline_max": max(full["vs_baseline"].values(), default=None),
-        "vs_r4_norm_max": max(full["vs_r4_norm"].values(), default=None),
+        # the largest ratio the envelope gate compares to ENVELOPE
+        "vs_baseline_max": max(
+            (round(r, 3) for r in reference_ratios(full["queries"]).values()),
+            default=None,
+        ),
     }
     line = json.dumps(compact)
     if len(line) > 1900:  # belt-and-braces: drop per-query detail before clipping
@@ -757,8 +699,8 @@ def main() -> None:
     # right after warm-up on a still-fresh session — because the r12
     # anchors were measured under exactly these conditions; running the
     # probes at the end of the bench (r12's first wiring) read them under
-    # end-of-session memory pressure and skewed the shuffle shift 1.37 vs
-    # the query-derived 0.74. shift = fresh wall / r12 anchor, per class.
+    # end-of-session memory pressure and skewed the shuffle shift.
+    # shift = fresh wall / r12 anchor, per class.
     probe_walls = run_class_probes(spark, sf_dir)
     probe_shift = {
         cls: round(probe_walls[cls] / PROBE_ANCHOR[cls], 3)
@@ -769,14 +711,13 @@ def main() -> None:
     # scheduling, and this VM's wall clock is noisy (±20-30% run-to-run);
     # the min reflects the engine's steady-state data path, which is what
     # the cross-round 2x regression envelope should track.
-    times: dict[str, float] = {}
-    for name in names:
-        best = float("inf")
-        for _ in range(3):
-            t0 = time.perf_counter()
-            registry[name].fn(spark, sf_dir).count()
-            best = min(best, time.perf_counter() - t0)
-        times[name] = round(best, 3)
+    def run_query(name: str) -> None:
+        registry[name].fn(spark, sf_dir).count()
+
+    times: dict[str, float] = {
+        name: round(min(timed_runs(lambda: run_query(name), 3)), 3)
+        for name in names
+    }
 
     # Second-chance re-time for envelope violators: this VM's wall clock
     # swings 3-8x run-to-run (PLANS.md), and a single transient spike can
@@ -786,24 +727,11 @@ def main() -> None:
     # the violators — still real executions, still min() — removes the
     # one-bad-window failure mode without loosening the gate: a query
     # that is GENUINELY >2x slower stays >2x across six runs.
-    def _violators(ts: dict[str, float]) -> list[str]:
-        med0_vals = [ts[n] / R1_BASELINE[n] for n in ts if n in R1_BASELINE]
-        med0 = statistics.median(med0_vals) if med0_vals else 1.0
-        out = []
-        for n, t in ts.items():
-            ref = R1_BASELINE.get(n) or R4_REFERENCE.get(n)
-            if ref is None:
-                continue
-            r = t / ref
-            if min(r, r / max(med0, 1e-9)) > 2.0:
-                out.append(n)
-        return out
-
-    # Retime audit trail (r16, from r15 ADVICE): the violator re-time is
-    # asymmetric by design (only >2x readings get extra samples), so the
-    # artifact records every query's PRE-retime wall and how many retime
-    # passes touched it — the retime's effect on the headline numbers is
-    # then fully auditable across rounds.
+    #
+    # Retime audit trail: the violator re-time is asymmetric by design
+    # (only >2x readings get extra samples), so the artifact records every
+    # query's PRE-retime wall and how many retime passes touched it — the
+    # retime's effect on the headline numbers is then fully auditable.
     retime_log: dict[str, dict] = {}
 
     def _retime(names: list[str]) -> None:
@@ -812,14 +740,11 @@ def main() -> None:
                 name, {"pre_retime_sec": times[name], "n_retime_passes": 0}
             )
             entry["n_retime_passes"] += 1
-            best = times[name]
-            for _ in range(3):
-                t0 = time.perf_counter()
-                registry[name].fn(spark, sf_dir).count()
-                best = min(best, time.perf_counter() - t0)
-            times[name] = round(best, 3)
+            times[name] = round(
+                min(times[name], *timed_runs(lambda: run_query(name), 3)), 3
+            )
 
-    _retime(_violators(times))
+    _retime(envelope_violators(times))
 
     # e2e CDC load rig (the reference's scripts/e2e-load-test.sh analog):
     # full pipeline ops/sec as a sibling metric. n_ops is recorded in the
@@ -837,11 +762,7 @@ def main() -> None:
     from better_cdc_spark.io import load_table
 
     n_events = load_table(spark, sf_dir, "events").count()
-    stream_best = float("inf")
-    for _ in range(2):
-        t0 = time.perf_counter()
-        registry["q81c_streaming_ohlc"].fn(spark, sf_dir).count()
-        stream_best = min(stream_best, time.perf_counter() - t0)
+    stream_best = min(timed_runs(lambda: run_query("q81c_streaming_ohlc"), 2))
     streaming = {
         "metric": "q81c_streaming_ohlc_events_per_sec",
         "value": round(n_events / stream_best, 1),
@@ -883,73 +804,8 @@ def main() -> None:
     # every number is still a real execution — a genuine 2x regression
     # stays 2x in every window, while a transient host window stops
     # failing the round.
-    _retime(_violators(times))
+    _retime(envelope_violators(times))
     total = round(sum(times.values()), 3)
-
-    # mechanical 2x-envelope check vs the r1 baseline (shared queries only)
-    vs_baseline = {
-        n: round(times[n] / R1_BASELINE[n], 3) for n in times if n in R1_BASELINE
-    }
-    # queries added after r1 track against their first bench appearance
-    # (r4) instead, so every headline row has a mechanical reference
-    vs_r4 = {
-        n: round(times[n] / R4_REFERENCE[n], 3)
-        for n in times
-        if n in R4_REFERENCE and n not in R1_BASELINE
-    }
-    # VM-drift handling: this rig's wall clock shifts 1.2-3x between rounds
-    # on identical plans (r6->r7 slowed every zero-shuffle narrow map
-    # uniformly; r7->r8 sped the shuffle-bound median up 1.8x while the
-    # CPU-bound similarity joins did NOT follow — drift is not even
-    # uniform within a round). The median vs_baseline ratio across the 14
-    # r1 queries is the round's VM-shift estimate; each query is judged on
-    # min(raw, raw/median): a query trips the gate only when it is >2x its
-    # reference under the MOST FAVORABLE VM interpretation — i.e. a
-    # regression no amount of host drift explains. (A strict both-sided
-    # gate would need per-query VM characterization; min() never fakes a
-    # regression and still catches every real >2x one.)
-    med = statistics.median(vs_baseline.values()) if vs_baseline else 1.0
-    vs_r4_norm = {n: round(r / max(med, 1e-9), 3) for n, r in vs_r4.items()}
-
-    # Per-CLASS medians (r11 verdict: drift is class-shaped — the global
-    # median is computed from the 14 shuffle-dominated r1 queries and
-    # over-penalizes the CPU class when the host drifts them apart). Each
-    # query is judged against the median of ITS drift class; the envelope
-    # takes min(raw, global-normalized, class-normalized) — still never
-    # fakes a regression, still catches any >2x no drift story explains.
-    all_ratios = {**vs_baseline, **vs_r4}
-    med_class: dict[str, float] = {}
-    for cls in ("shuffle", "cpu"):
-        vals = [r for n, r in all_ratios.items() if DRIFT_CLASS.get(n) == cls]
-        med_class[cls] = statistics.median(vals) if vals else med
-    vs_class_norm = {
-        n: round(r / max(med_class.get(DRIFT_CLASS.get(n, ""), med), 1e-9), 3)
-        for n, r in all_ratios.items()
-    }
-    # Two-term gate: the normalized min catches per-query regressions no
-    # drift story explains; the RAW absolute cap (4x) backstops the case
-    # where a correlated real regression across most of one ~8-query class
-    # shifts that class median and would otherwise normalize itself away.
-    envelope_ok = all(
-        min(r, r / max(med, 1e-9), vs_class_norm[n]) <= 2.0 and r <= 4.0
-        for n, r in all_ratios.items()
-    )
-
-    # r14 anchors (fresh current-profile measurement; see R14_ANCHOR
-    # comment + ANCHORS_R14.json): same normalization machinery, honest
-    # denominator. The r1/r4 metrics above keep running for history; the
-    # drift-watch narrative reads THESE.
-    vs_anchor = {
-        n: round(times[n] / R14_ANCHOR[n], 3) for n in times if n in R14_ANCHOR
-    }
-    anchor_med_class: dict[str, float] = {}
-    for cls in ("shuffle", "cpu"):
-        vals = [r for n, r in vs_anchor.items() if DRIFT_CLASS.get(n) == cls]
-        anchor_med_class[cls] = statistics.median(vals) if vals else 1.0
-    vs_anchor_class_norm = {
-        n: round(r / max(anchor_med_class.get(DRIFT_CLASS.get(n, ""), 1.0), 1e-9), 3)
-        for n, r in vs_anchor.items()
-    }
 
     full = {
         "metric": "headline_queries_total_wall",
@@ -961,22 +817,16 @@ def main() -> None:
         "streaming": streaming,
         "replay_sink": replay_sink,
         "blocked_window": blocked_win,
-        "vs_baseline": vs_baseline,
-        "vs_r4": vs_r4,
-        "vm_shift_median": round(med, 3),
-        "vs_r4_norm": vs_r4_norm,
-        "vm_shift_class": {c: round(v, 3) for c, v in med_class.items()},
-        "vs_class_norm": vs_class_norm,
-        "vs_anchor_r14": vs_anchor,
-        "anchor_shift_class": {c: round(v, 3) for c, v in anchor_med_class.items()},
-        "vs_anchor_class_norm": vs_anchor_class_norm,
+        "vs_reference": {
+            n: round(r, 3) for n, r in reference_ratios(times).items()
+        },
         "probe_walls": probe_walls,
         "probe_shift": probe_shift,
         "retime": retime_log,
         "sf1_scaling": sf1_scaling,
         "e2e_scale_1m": E2E_SCALE_1M,
         "app_scale_1m": APP_SCALE_1M,
-        "envelope_ok": envelope_ok,
+        "envelope_ok": envelope_ok(times),
     }
     # Full diagnostics go to a file + an early stdout line; the FINAL stdout
     # line is a compact subset guaranteed to fit the driver's 2000-byte tail

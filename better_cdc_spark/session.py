@@ -33,6 +33,11 @@ def get_spark(app_name: str = "better_cdc_spark", cpus: int | None = None) -> Sp
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         .config("spark.sql.shuffle.spill.compress", "true")
         .config("spark.sql.parquet.filterPushdown", "true")
+        # reliable ckpt (BCS_RELIABLE_CKPT=1) writes files under the
+        # checkpoint dir; let the ContextCleaner delete them once the
+        # checkpointed frame is garbage collected, or every loop and
+        # foreachBatch call leaks its materializations on disk
+        .config("spark.cleaner.referenceTracking.cleanCheckpoints", "true")
     )
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
@@ -52,9 +57,14 @@ def ckpt(df):
     fault-tolerant checkpoint dir (``BCS_CKPT_DIR``, default
     ``/tmp/bcs_reliable_ckpt``; point it at HDFS/object storage on a real
     deployment) — same plan-truncation semantics, recomputable-free
-    recovery after executor death. The env is read per call so tests cover
-    both branches in one process; the flag flips the storage contract only,
-    never results.
+    recovery after executor death. Sessions from ``get_spark`` delete the
+    files once the checkpointed frame is garbage collected.
+
+    ``BCS_RELIABLE_CKPT`` is read per call, so tests cover both branches in
+    one process; the flag flips the storage contract only, never results.
+    ``BCS_CKPT_DIR`` binds on the first reliable call per SparkContext (or
+    not at all, when a checkpoint dir is already set): changing it later in
+    the same context has no effect.
     """
     if os.environ.get("BCS_RELIABLE_CKPT", "0") == "1":
         sc = df.sparkSession.sparkContext

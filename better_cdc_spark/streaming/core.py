@@ -137,7 +137,10 @@ def run_to_memory(
     # via a catalog strong reference forever, so a long session running
     # many streaming queries (full sweep ≈ 30+) accumulates every result
     # table. localCheckpoint blocks, by contrast, are released by the
-    # ContextCleaner once the returned frame is garbage collected.
+    # ContextCleaner once the returned frame is garbage collected. That
+    # holds for ckpt's local branch; under BCS_RELIABLE_CKPT=1 the files
+    # are deleted only when spark.cleaner.referenceTracking.cleanCheckpoints
+    # is on (get_spark sets it; a caller-built session may not).
     spark = sdf.sparkSession
     out = spark.table(name).transform(ckpt)
     spark.catalog.dropTempView(name)

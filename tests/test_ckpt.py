@@ -23,12 +23,11 @@ def clean_env(monkeypatch, tmp_path):
 def test_default_branch_is_local_checkpoint(spark, clean_env):
     df = spark.range(100).withColumn("v", F.col("id") * 2)
     out = df.transform(ckpt)
-    # localCheckpoint truncates lineage to an RDD scan and needs no
-    # checkpoint dir; the reliable dir must NOT have been created
+    # localCheckpoint truncates lineage to an RDD scan (LogicalRDD in the
+    # optimized plan) and needs no checkpoint dir; the reliable dir must
+    # NOT have been created
     assert out.count() == 100
-    assert "ExistingRDD" in out._jdf.queryExecution().optimizedPlan().toString() or (
-        not os.path.exists(str(clean_env / "reliable"))
-    )
+    assert "LogicalRDD" in out._jdf.queryExecution().optimizedPlan().toString()
     assert not os.path.exists(str(clean_env / "reliable"))
     assert sorted(r["v"] for r in out.collect()) == sorted(
         r["v"] for r in df.collect()
@@ -49,6 +48,9 @@ def test_reliable_branch_writes_checkpoint_files(spark, clean_env, monkeypatch):
         for f in fs
     ]
     assert found, "no reliable checkpoint files written"
+    # get_spark lets the ContextCleaner delete them once `out` is collected
+    conf = spark.sparkContext.getConf()
+    assert conf.get("spark.cleaner.referenceTracking.cleanCheckpoints") == "true"
     assert sorted(r["v"] for r in out.collect()) == sorted(
         r["v"] for r in df.collect()
     )

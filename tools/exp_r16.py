@@ -15,12 +15,12 @@ from __future__ import annotations
 
 import os
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import DataFrame, Window as W, functions as F
 
+from bench import timed_runs
 from better_cdc_spark import llmops
 from better_cdc_spark.io import load_table
 from better_cdc_spark.session import get_spark, tune_for_oracle
@@ -29,12 +29,8 @@ REPS = int(os.environ.get("EXP_REPS", "3"))
 
 
 def _time(label: str, fn, spark, sf_dir: str, reps: int = REPS) -> float:
-    walls = []
     spark.sparkContext.setJobDescription(f"exp:{label}")
-    for _ in range(reps):
-        t0 = time.perf_counter()
-        fn(spark, sf_dir).count()
-        walls.append(time.perf_counter() - t0)
+    walls = timed_runs(lambda: fn(spark, sf_dir).count(), reps)
     spark.sparkContext.setJobDescription(None)
     print(f"  {label}: min={min(walls):.3f} all={[round(w, 3) for w in walls]}",
           flush=True)

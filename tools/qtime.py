@@ -6,16 +6,25 @@ harness for optimization rounds.
     SPARK_GRAFT_SF_DIR=... SPARK_GRAFT_CPUS=... override as usual
     QTIME_REPS=N for a different rep count; QTIME_NOOP=1 times the noop
     sink (guide §1.4) instead of count() for column-pruning-proof timing.
+
+Core scaling of the heavy similarity family on the persisted sf1-equivalent
+corpus (tools/sf1_corpus.py): run once per core count, a fresh process each
+(the Spark master is fixed per JVM), and compare.
+
+    SPARK_GRAFT_CPUS=32 SPARK_GRAFT_SF_DIR=/tmp/bcs_sf1_ab QTIME_REPS=2 \\
+        python tools/qtime.py q94_curation_pipeline q94d_curation_pipeline_lsh \\
+        q96_minhash_lsh q96e_tfidf_cosine q97h_bm25_topk q95p_dup_span_extract \\
+        q96d_semdedup
 """
 
 from __future__ import annotations
 
 import os
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+from bench import timed_runs
 from better_cdc_spark.queries import load_all
 from better_cdc_spark.session import DEFAULT_SF_DIR, get_spark
 
@@ -34,15 +43,15 @@ def main() -> int:
 
     for name in names:
         spark.sparkContext.setJobDescription(f"qtime:{name}")
-        walls = []
-        for _ in range(reps):
-            t0 = time.perf_counter()
+
+        def run() -> None:
             df = registry[name].fn(spark, sf_dir)
             if use_noop:
                 df.write.format("noop").mode("overwrite").save()
             else:
                 df.count()
-            walls.append(time.perf_counter() - t0)
+
+        walls = timed_runs(run, reps)
         spark.sparkContext.setJobDescription(None)
         print(
             f"QTIME {name} min={min(walls):.3f} "

@@ -3,10 +3,10 @@
 The bench's run_sf1_scaling fabricates a 10x constant-dup-density corpus in
 a temp dir and deletes it; optimization A/Bs need the same corpus to live
 across sessions so old/new query forms can be timed against identical
-bytes. This writes documents.parquet + embeddings.parquet with the exact
-amplification scheme bench._run_sf1_scaling_at uses, plus symlinks for the
-remaining sf0.1 tables so registry queries that read lineitem/orders/etc.
-still resolve.
+bytes. This writes documents.parquet + embeddings.parquet through
+bench.write_amplified_corpus (the bench's own scheme), ×10 copies of orders
+and events, plus symlinks for the remaining sf0.1 tables so registry
+queries that read lineitem/etc. still resolve.
 
     PYTHONPATH=/root/repo python tools/sf1_corpus.py /tmp/bcs_sf1_ab
 
@@ -24,6 +24,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 def main() -> int:
     from pyspark.sql import functions as F
 
+    from bench import SF1_COPIES, write_amplified_corpus
     from better_cdc_spark.io import load_table
     from better_cdc_spark.session import get_spark
 
@@ -32,64 +33,12 @@ def main() -> int:
     os.makedirs(out_dir, exist_ok=True)
     spark = get_spark("sf1-corpus")
 
-    docs = load_table(spark, sf_dir, "documents")
-    n_copies = 10
-    toks = F.split(F.col("text"), " ")
-    mutated = F.array_join(
-        F.zip_with(
-            toks,
-            F.sequence(F.lit(1), F.size(toks)),
-            lambda w, i: F.when(
-                (i + F.col("copy")) % 3 == 0,
-                F.concat(w, F.lit("x"), F.col("copy").cast("string")),
-            ).otherwise(w),
-        ),
-        " ",
-    )
-    amplified = (
-        docs.crossJoin(spark.range(n_copies).select(F.col("id").alias("copy")))
-        .select(
-            (F.col("doc_id") + F.col("copy") * 1_000_000).alias("doc_id"),
-            F.when(F.col("copy") <= 1, F.col("text")).otherwise(mutated).alias("text"),
-            "lang",
-            "source",
-            "n_chars",
-            "copy",
-        )
-        .drop("copy")
-    )
-    amplified.repartition(32).write.mode("overwrite").parquet(
-        f"{out_dir}/documents.parquet"
-    )
-
-    emb = load_table(spark, sf_dir, "embeddings")
-    emb_amp = (
-        emb.crossJoin(spark.range(n_copies).select(F.col("id").alias("copy")))
-        .select(
-            (F.col("vec_id") + F.col("copy") * 1_000_000).alias("vec_id"),
-            F.when(F.col("copy") <= 1, F.col("embedding"))
-            .otherwise(
-                F.transform(
-                    F.col("embedding"),
-                    lambda x, i: F.when(
-                        i == F.col("copy") % 64,
-                        x + (F.lit(0.5) + F.col("copy") * 0.125).cast("float"),
-                    ).otherwise(x),
-                )
-            )
-            .alias("embedding"),
-            "label",
-        )
-    )
-    emb_amp.repartition(32).write.mode("overwrite").parquet(
-        f"{out_dir}/embeddings.parquet"
-    )
+    write_amplified_corpus(spark, sf_dir, out_dir)
+    copies = spark.range(SF1_COPIES).select(F.col("id").alias("copy"))
 
     # orders ×10 (distinct keys per copy) — for the qc01 changelog A/B
     orders = load_table(spark, sf_dir, "orders")
-    orders_amp = orders.crossJoin(
-        spark.range(n_copies).select(F.col("id").alias("copy"))
-    ).select(
+    orders_amp = orders.crossJoin(copies).select(
         (F.col("o_orderkey") + F.col("copy") * 100_000_000).alias("o_orderkey"),
         *[c for c in orders.columns if c != "o_orderkey"],
     ).drop("copy")
@@ -99,9 +48,7 @@ def main() -> int:
 
     # events ×10 (distinct users/events per copy) — for the q48 bitmap A/B
     events = spark.read.parquet(f"{sf_dir}/events.parquet")
-    events_amp = events.crossJoin(
-        spark.range(n_copies).select(F.col("id").alias("copy"))
-    ).select(
+    events_amp = events.crossJoin(copies).select(
         *[
             (F.col("user_id") + F.col("copy") * 10_000_000).alias("user_id")
             if c == "user_id"
