@@ -1,4 +1,4 @@
-"""Bench plumbing the driver runs per-round: envelope gate, drift probes,
+"""Bench plumbing run in every benchmark round: envelope gate, drift probes,
 sf1 probe, compact line.
 
 bench.py's per-class drift probes and the sf1 scaling probe execute only
@@ -88,7 +88,7 @@ def test_gate_replays_every_committed_bench_verdict():
     for path in paths:
         parsed = json.load(open(path)).get("parsed")
         if not parsed:
-            continue  # r07: the driver captured no parseable line
+            continue  # r07: the artifact holds no parsed compact line
         times = parsed["queries"]
         assert bench.reference_ratios(times), path
         assert bench.envelope_ok(times) == parsed.get("envelope_ok", True), (

@@ -1,8 +1,10 @@
 """Capture `.explain("formatted")` for headline queries into plans/<tag>/.
 
 Usage:
-    PYTHONPATH=/root/repo python tools/plan_capture.py <tag> before [names...]
-    PYTHONPATH=/root/repo python tools/plan_capture.py <tag> after  [names...]
+    python tools/plan_capture.py <tag> before [names...]
+    python tools/plan_capture.py <tag> after  [names...]
+
+(the script puts the repository root on sys.path itself)
 
 With no names, captures every bench.HEADLINE query. The formatted plan is
 the PRE-EXECUTION plan (AdaptiveSparkPlan isFinalPlan=false) — the shape
@@ -21,7 +23,6 @@ from contextlib import redirect_stdout
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
 
 def main() -> int:
@@ -30,7 +31,7 @@ def main() -> int:
         return 2
     from bench import HEADLINE
     from better_cdc_spark.queries import load_all
-    from better_cdc_spark.session import get_spark
+    from better_cdc_spark.session import DEFAULT_SF_DIR, get_spark
 
     tag, suffix = sys.argv[1], sys.argv[2]
     names = sys.argv[3:] or HEADLINE
@@ -43,7 +44,7 @@ def main() -> int:
         if name not in registry:
             print(f"skip {name}: not in registry")
             continue
-        df = registry[name].fn(spark, SF_DIR)
+        df = registry[name].fn(spark, DEFAULT_SF_DIR)
         buf = io.StringIO()
         with redirect_stdout(buf):
             df.explain("formatted")
